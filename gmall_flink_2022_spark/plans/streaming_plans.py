@@ -1,7 +1,8 @@
 """Streaming-mode registry entries.
 
-Each runs a genuine Structured Streaming query (file source ->
-availableNow trigger -> memory sink) and returns the settled result as a
+Each runs a genuine Structured Streaming query to completion through
+``streaming.runner`` (file source -> bounded trigger -> memory, hop or
+foreachBatch sink) and returns the settled result as a
 batch DataFrame, so the driver's correctness gate exercises the real
 streaming code path — state stores, watermarks, stream-stream join — and
 still hash-compares against a plain SQL oracle. This mirrors how every
@@ -20,9 +21,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..sources.io import read_stream_table, read_table
 from ..streaming.bounce_state import bounce_detect_stateful
+from ..sources.dim_store import DimStore
 from ..streaming.runner import (
-    DEFAULT_STATE_PARTITIONS,
-    _pinned_shuffle_partitions,
+    run_stream_foreach_batch,
+    run_stream_hop,
     run_stream_to_table,
 )
 from ..streaming.uv_state import unique_visit_stateful
@@ -33,6 +35,65 @@ DEC = "decimal(18,2)"
 
 def _uniq(name: str) -> str:
     return f"{name}_{uuid.uuid4().hex[:8]}"
+
+
+def _run_update_upsert(agg: DataFrame, table: str) -> DataFrame:
+    """Run an update-mode streaming aggregation to completion through a
+    keyed-upsert store on its ``_k`` column (per-trigger changed rows
+    only) and read back the settled table without ``_k``. The 100 TB sink
+    shape: state leaves the streaming job as idempotent upserts, never a
+    complete-mode full re-emit."""
+    spark = agg.sparkSession
+    root = tempfile.mkdtemp(prefix="gmall_scale_store_")
+    store = DimStore(spark, root)
+
+    def upsert(batch: DataFrame, batch_id: int) -> None:
+        store.upsert(table, batch, pk="_k")
+
+    try:
+        run_stream_foreach_batch(agg, upsert, output_mode="update")
+        # If every micro-batch was empty (e.g. an empty source), the
+        # empty-batch guard in DimStore.upsert never created the table —
+        # return an empty result with the aggregation's schema instead
+        # of letting store.read raise on the missing path.
+        if not store.exists(table):
+            return spark.createDataFrame([], agg.drop("_k").schema)
+        # materialize before the finally deletes the store files the
+        # returned plan would otherwise lazily read after cleanup
+        return store.read(table).drop("_k").localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _pay_view_pairs(ev: DataFrame) -> DataFrame:
+    """Stream-stream interval join of each purchase with the same user's
+    views in the 15 minutes before it, 5 s watermarks on both sides: the
+    PaymentWideApp band shared by the payment-wide and two-hop entries."""
+    pay = (
+        ev.filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("pay_event_id"),
+            F.col("user_id"),
+            F.col("ts").alias("pay_ts"),
+        )
+        .withWatermark("pay_ts", "5 seconds")
+    )
+    view = (
+        ev.filter(F.col("event_type") == "view")
+        .select(
+            F.col("event_id").alias("view_event_id"),
+            F.col("user_id").alias("v_user_id"),
+            F.col("ts").alias("view_ts"),
+        )
+        .withWatermark("view_ts", "5 seconds")
+    )
+    return pay.join(
+        view,
+        (pay["user_id"] == view["v_user_id"])
+        & (view["view_ts"] >= pay["pay_ts"] - F.expr("INTERVAL 900 SECONDS"))
+        & (view["view_ts"] <= pay["pay_ts"]),
+        "inner",
+    ).select("pay_event_id", "view_event_id", "user_id", "pay_ts", "view_ts")
 
 
 @register(
@@ -90,32 +151,7 @@ def stream_visitor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "join"),
 )
 def stream_payment_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = read_stream_table(spark, sf_dir, "events")
-    pay = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("pay_event_id"),
-            F.col("user_id"),
-            F.col("ts").alias("pay_ts"),
-        )
-        .withWatermark("pay_ts", "5 seconds")
-    )
-    view = (
-        ev.filter(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_event_id"),
-            F.col("user_id").alias("v_user_id"),
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", "5 seconds")
-    )
-    joined = pay.join(
-        view,
-        (pay["user_id"] == view["v_user_id"])
-        & (view["view_ts"] >= pay["pay_ts"] - F.expr("INTERVAL 900 SECONDS"))
-        & (view["view_ts"] <= pay["pay_ts"]),
-        "inner",
-    ).select("pay_event_id", "view_event_id", "user_id", "pay_ts", "view_ts")
+    joined = _pay_view_pairs(read_stream_table(spark, sf_dir, "events"))
     return run_stream_to_table(joined, _uniq("payment_wide"), output_mode="append")
 
 
@@ -350,8 +386,6 @@ def stream_payment_wide_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "agg", "sink"),
 )
 def stream_stats_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.dim_store import DimStore
-
     ev = read_stream_table(spark, sf_dir, "events")
     fmt = "yyyy-MM-dd HH:mm:ss"
     agg = (
@@ -370,28 +404,7 @@ def stream_stats_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         # surrogate upsert key = the group-by key (stt, event_type)
         .withColumn("_k", F.concat_ws("|", "stt", "event_type"))
     )
-    root = tempfile.mkdtemp(prefix="gmall_stats_store_")
-    store = DimStore(spark, root)
-
-    def upsert(batch: DataFrame, batch_id: int) -> None:
-        store.upsert("visitor_stats", batch, pk="_k")
-
-    ckpt = tempfile.mkdtemp(prefix="gmall_ckpt_")
-    try:
-        with _pinned_shuffle_partitions(spark, DEFAULT_STATE_PARTITIONS):
-            q = (
-                agg.writeStream.outputMode("update")
-                .foreachBatch(upsert)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination()
-        # materialize before cleanup deletes the files the lazy plan reads
-        return store.read("visitor_stats").drop("_k").localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    return _run_update_upsert(agg, "visitor_stats")
 
 
 @register(
@@ -486,61 +499,30 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "join", "agg", "pipeline", "exact_demo"),
 )
 def stream_two_hop_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev_schema = read_table(spark, sf_dir, "events").schema
     stage = tempfile.mkdtemp(prefix="gmall_hop_")
-    src = read_stream_table(spark, sf_dir, "events")
-    pay = (
-        src.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("pay_event_id"),
-            "user_id",
-            F.col("ts").alias("pay_ts"),
+    try:
+        joined = _pay_view_pairs(read_stream_table(spark, sf_dir, "events"))
+        # second job re-reads the hop exactly like PaymentWideApp re-reads
+        # the dwm_order_wide topic
+        hop_stream = run_stream_hop(
+            joined.drop("view_ts"), os.path.join(stage, "hop_pay_view")
         )
-        .withWatermark("pay_ts", "5 seconds")
-    )
-    view = (
-        src.filter(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_event_id"),
-            F.col("user_id").alias("v_user_id"),
-            F.col("ts").alias("view_ts"),
+        agg = (
+            hop_stream.groupBy(F.window("pay_ts", "1 hour").alias("w"))
+            .agg(
+                F.count(F.lit(1)).alias("pair_ct"),
+                F.size(F.collect_set("view_event_id")).cast("long").alias("view_ct"),
+            )
+            .select(
+                F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("stt"),
+                "pair_ct",
+                "view_ct",
+            )
         )
-        .withWatermark("view_ts", "5 seconds")
-    )
-    joined = pay.join(
-        view,
-        (pay["user_id"] == view["v_user_id"])
-        & (view["view_ts"] >= pay["pay_ts"] - F.expr("INTERVAL 900 SECONDS"))
-        & (view["view_ts"] <= pay["pay_ts"]),
-    ).select("pay_event_id", "view_event_id", "user_id", "pay_ts")
-    hop = os.path.join(stage, "hop_pay_view")
-    with _pinned_shuffle_partitions(spark, DEFAULT_STATE_PARTITIONS):
-        q1 = (
-            joined.writeStream.format("parquet")
-            .option("path", hop)
-            .option("checkpointLocation", os.path.join(stage, "ck1"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q1.awaitTermination()
-    # second job re-reads the hop exactly like PaymentWideApp re-reads
-    # the dwm_order_wide topic
-    hop_stream = spark.readStream.schema(
-        spark.read.parquet(hop).schema
-    ).parquet(hop)
-    agg = (
-        hop_stream.groupBy(F.window("pay_ts", "1 hour").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("pair_ct"),
-            F.size(F.collect_set("view_event_id")).cast("long").alias("view_ct"),
-        )
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("stt"),
-            "pair_ct",
-            "view_ct",
-        )
-    )
-    return run_stream_to_table(agg, _uniq("two_hop"), output_mode="complete")
+        # the memory sink holds the result, so the hop can go
+        return run_stream_to_table(agg, _uniq("two_hop"), output_mode="complete")
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
 
 
 def visitor_stats_scale_agg(ev: DataFrame) -> DataFrame:
@@ -592,35 +574,9 @@ def visitor_stats_scale_agg(ev: DataFrame) -> DataFrame:
     bench=True,
 )
 def stream_visitor_stats_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.dim_store import DimStore
-
     ev = read_stream_table(spark, sf_dir, "events")
     fmt = "yyyy-MM-dd HH:mm:ss"
-    agg = visitor_stats_scale_agg(ev)
-    root = tempfile.mkdtemp(prefix="gmall_uvscale_store_")
-    store = DimStore(spark, root)
-
-    def upsert(batch: DataFrame, batch_id: int) -> None:
-        store.upsert("visitor_stats_scale", batch, pk="_k")
-
-    ckpt = tempfile.mkdtemp(prefix="gmall_ckpt_")
-    try:
-        with _pinned_shuffle_partitions(spark, DEFAULT_STATE_PARTITIONS):
-            q = (
-                agg.writeStream.outputMode("update")
-                .foreachBatch(upsert)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination()
-        # materialize before cleanup deletes the files the lazy plan reads
-        settled = store.read("visitor_stats_scale").drop("_k").localCheckpoint(
-            eager=True
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    settled = _run_update_upsert(visitor_stats_scale_agg(ev), "visitor_stats_scale")
     # --- verification harness (batch side; NOT part of the pipeline) ---
     # fold the HLL estimate into a per-group tolerance boolean against the
     # exact batch count so the driver hash-checks approximation quality
@@ -692,18 +648,8 @@ def stats_store_idempotent_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
                 "dur_sum",
             )
         )
-        store = IdempotentBatchStore(
-            spark, tempfile.mkdtemp(prefix="gmall_eos_store_")
-        )
-        with _pinned_shuffle_partitions(spark, DEFAULT_STATE_PARTITIONS):
-            q = (
-                agg.writeStream.outputMode("update")
-                .foreachBatch(store.write_batch)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", os.path.join(stage, "ck"))
-                .start()
-            )
-            q.awaitTermination()
+        store = IdempotentBatchStore(spark, os.path.join(stage, "store"))
+        run_stream_foreach_batch(agg, store.write_batch, output_mode="update")
         # --- replay the final micro-batch, both failure modes ---
         ids = store.committed_ids()
         if not ids:  # empty input -> zero committed micro-batches
@@ -719,7 +665,8 @@ def stats_store_idempotent_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
         store.write_batch(replayed, last)  # committed -> must no-op
         os.remove(os.path.join(store.commit_dir, str(last)))  # crash sim
         store.write_batch(replayed, last)  # uncommitted -> overwrite, no dupes
-        return store.read_latest(["stt", "event_type"])
+        # materialize before the finally deletes the store under the stage
+        return store.read_latest(["stt", "event_type"]).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(stage, ignore_errors=True)
 
@@ -797,41 +744,7 @@ def stream_two_hop_eos(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stage = tempfile.mkdtemp(prefix="gmall_hop_eos_")
     try:
-        src = read_stream_table(spark, sf_dir, "events")
-        pay = (
-            src.filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("event_id").alias("pay_event_id"),
-                "user_id",
-                F.col("ts").alias("pay_ts"),
-            )
-            .withWatermark("pay_ts", "5 seconds")
-        )
-        view = (
-            src.filter(F.col("event_type") == "view")
-            .select(
-                F.col("event_id").alias("view_event_id"),
-                F.col("user_id").alias("v_user_id"),
-                F.col("ts").alias("view_ts"),
-            )
-            .withWatermark("view_ts", "5 seconds")
-        )
-        joined = pay.join(
-            view,
-            (pay["user_id"] == view["v_user_id"])
-            & (view["view_ts"] >= pay["pay_ts"] - F.expr("INTERVAL 900 SECONDS"))
-            & (view["view_ts"] <= pay["pay_ts"]),
-        ).select("pay_event_id", "view_event_id", "user_id", "pay_ts")
-        hop = os.path.join(stage, "hop")
-        with _pinned_shuffle_partitions(spark, DEFAULT_STATE_PARTITIONS):
-            q1 = (
-                joined.writeStream.format("parquet")
-                .option("path", hop)
-                .option("checkpointLocation", os.path.join(stage, "ck1"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q1.awaitTermination()
+        joined = _pay_view_pairs(read_stream_table(spark, sf_dir, "events"))
         # One file per trigger so the second job genuinely crosses
         # micro-batches. NO watermark here: the hop files are not
         # time-ordered (the join wrote them from many shuffle partitions),
@@ -839,9 +752,9 @@ def stream_two_hop_eos(spark: SparkSession, sf_dir: str) -> DataFrame:
         # trigger late and silently drop it — update mode without a
         # watermark keeps all window state for the bounded replay, same
         # as stats_store_idempotent_upsert.
-        hop_stream = spark.readStream.schema(
-            spark.read.parquet(hop).schema
-        ).option("maxFilesPerTrigger", 1).parquet(hop)
+        hop_stream = run_stream_hop(
+            joined.drop("view_ts"), os.path.join(stage, "hop"), max_files_per_trigger=1
+        )
         agg = (
             hop_stream
             .groupBy(F.window("pay_ts", "1 hour").alias("w"))
@@ -850,24 +763,9 @@ def stream_two_hop_eos(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("stt"),
                 "pair_ct",
             )
-            .withColumn("_k", F.col("stt"))
         )
-        store = IdempotentBatchStore(
-            spark, tempfile.mkdtemp(prefix="gmall_hop_eos_store_")
-        )
-
-        def sink(batch: DataFrame, batch_id: int) -> None:
-            store.write_batch(batch.drop("_k"), batch_id)
-
-        with _pinned_shuffle_partitions(spark, DEFAULT_STATE_PARTITIONS):
-            q2 = (
-                agg.writeStream.outputMode("update")
-                .foreachBatch(sink)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", os.path.join(stage, "ck2"))
-                .start()
-            )
-            q2.awaitTermination()
+        store = IdempotentBatchStore(spark, os.path.join(stage, "store"))
+        run_stream_foreach_batch(agg, store.write_batch, output_mode="update")
         ids = store.committed_ids()
         if not ids:  # empty input -> zero committed micro-batches
             return spark.createDataFrame([], "stt string, pair_ct bigint")
@@ -878,7 +776,8 @@ def stream_two_hop_eos(spark: SparkSession, sf_dir: str) -> DataFrame:
         store.write_batch(replayed, last)  # committed -> no-op
         os.remove(os.path.join(store.commit_dir, str(last)))
         store.write_batch(replayed, last)  # crash sim -> rewrite in place
-        return store.read_latest(["stt"])
+        # materialize before the finally deletes the store under the stage
+        return store.read_latest(["stt"]).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(stage, ignore_errors=True)
 
@@ -896,48 +795,6 @@ def stream_two_hop_eos(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-group tolerance boolean against the exact batch count (oracle
 # emits literal TRUE), so approximation quality is driver-checked too.
 # ---------------------------------------------------------------------------
-
-
-def _run_update_upsert(agg: DataFrame, table: str, pk: str = "_k") -> DataFrame:
-    """Run an update-mode streaming aggregation to completion through a
-    keyed-upsert store (per-trigger changed rows only) and read back the
-    settled table. The 100 TB sink shape: state leaves the streaming job
-    as idempotent upserts, never a complete-mode full re-emit."""
-    from ..sources.dim_store import DimStore
-
-    spark = agg.sparkSession
-    root = tempfile.mkdtemp(prefix="gmall_scale_store_")
-    ckpt = tempfile.mkdtemp(prefix="gmall_ckpt_")
-    store = DimStore(spark, root)
-
-    def upsert(batch: DataFrame, batch_id: int) -> None:
-        store.upsert(table, batch, pk=pk)
-
-    try:
-        with _pinned_shuffle_partitions(spark, DEFAULT_STATE_PARTITIONS):
-            q = (
-                agg.writeStream.outputMode("update")
-                .foreachBatch(upsert)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination()
-        # If every micro-batch was empty (e.g. an empty source), the
-        # empty-batch guard in DimStore.upsert never created the table —
-        # return an empty result with the aggregation's schema instead
-        # of letting store.read raise on the missing path.
-        if not store.exists(table):
-            from pyspark.sql.types import StructType
-
-            schema = StructType([f for f in agg.schema.fields if f.name != pk])
-            return spark.createDataFrame([], schema)
-        # materialize before the finally deletes the store files the
-        # returned plan would otherwise lazily read after cleanup
-        return store.read(table).drop(pk).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def _tolerance_ok(approx_col: str, exact_col: str):
@@ -1146,50 +1003,13 @@ def stream_session_window_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_two_hop_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage = tempfile.mkdtemp(prefix="gmall_hop_scale_")
     try:
-        src = read_stream_table(spark, sf_dir, "events")
-        pay = (
-            src.filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("event_id").alias("pay_event_id"),
-                "user_id",
-                F.col("ts").alias("pay_ts"),
-            )
-            .withWatermark("pay_ts", "5 seconds")
-        )
-        view = (
-            src.filter(F.col("event_type") == "view")
-            .select(
-                F.col("event_id").alias("view_event_id"),
-                F.col("user_id").alias("v_user_id"),
-                F.col("ts").alias("view_ts"),
-            )
-            .withWatermark("view_ts", "5 seconds")
-        )
         joined = (
-            pay.join(
-                view,
-                (pay["user_id"] == view["v_user_id"])
-                & (view["view_ts"] >= pay["pay_ts"] - F.expr("INTERVAL 900 SECONDS"))
-                & (view["view_ts"] <= pay["pay_ts"]),
-            )
-            .select("pay_event_id", "view_event_id", "user_id", "pay_ts")
+            _pay_view_pairs(read_stream_table(spark, sf_dir, "events"))
+            .drop("view_ts")
             .coalesce(4)  # 4 hop files -> the replay genuinely crosses triggers
         )
         hop = os.path.join(stage, "hop")
-        with _pinned_shuffle_partitions(spark, DEFAULT_STATE_PARTITIONS):
-            q1 = (
-                joined.writeStream.format("parquet")
-                .option("path", hop)
-                .option("checkpointLocation", os.path.join(stage, "ck1"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q1.awaitTermination()
-        hop_stream = (
-            spark.readStream.schema(spark.read.parquet(hop).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(hop)
-        )
+        hop_stream = run_stream_hop(joined, hop, max_files_per_trigger=1)
         agg = (
             hop_stream.groupBy(F.window("pay_ts", "1 hour").alias("w"))
             .agg(
@@ -1205,7 +1025,8 @@ def stream_two_hop_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         settled = _run_update_upsert(agg, "two_hop_scale")
         exact = (
-            spark.read.parquet(hop)
+            spark.read.schema(joined.schema)
+            .parquet(hop)
             .groupBy(
                 F.date_format(F.date_trunc("hour", "pay_ts"), "yyyy-MM-dd HH:mm:ss").alias("stt")
             )
@@ -1607,7 +1428,6 @@ def _register_stream_incremental_dedup() -> None:
         import time
 
         from ..llm import incremental as inc
-        from ..sources.dim_store import DimStore
         from .llm_plans import _inc_corpus_arrivals
 
         corpus, arr1 = _inc_corpus_arrivals(spark, sf_dir)
@@ -1633,15 +1453,7 @@ def _register_stream_incremental_dedup() -> None:
                 .option("maxFilesPerTrigger", 1)
                 .parquet(in_dir)
             )
-            q = (
-                sdf.writeStream.foreachBatch(
-                    inc.foreach_batch_ingester(store, out_dir)
-                )
-                .trigger(availableNow=True)
-                .option("checkpointLocation", os.path.join(stage, "ck"))
-                .start()
-            )
-            q.awaitTermination()
+            run_stream_foreach_batch(sdf, inc.foreach_batch_ingester(store, out_dir))
             return spark.read.parquet(out_dir).localCheckpoint(eager=True)
         finally:
             shutil.rmtree(stage, ignore_errors=True)
@@ -1718,7 +1530,6 @@ def _register_stream_embed_incremental() -> None:
         import time
 
         from ..llm import incremental as inc
-        from ..sources.dim_store import DimStore
 
         embs = read_table(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding"
@@ -1765,17 +1576,12 @@ def _register_stream_embed_incremental() -> None:
                 .option("maxFilesPerTrigger", 1)
                 .parquet(in_dir)
             )
-            q = (
-                sdf.writeStream.foreachBatch(
-                    inc.foreach_batch_embed_ingester(
-                        store, out_dir, threshold=_EINC_THRESH, **kw
-                    )
-                )
-                .trigger(availableNow=True)
-                .option("checkpointLocation", os.path.join(stage, "ck"))
-                .start()
+            run_stream_foreach_batch(
+                sdf,
+                inc.foreach_batch_embed_ingester(
+                    store, out_dir, threshold=_EINC_THRESH, **kw
+                ),
             )
-            q.awaitTermination()
             return spark.read.parquet(out_dir).localCheckpoint(eager=True)
         finally:
             shutil.rmtree(stage, ignore_errors=True)
@@ -1810,7 +1616,6 @@ def _register_stream_cluster_maintenance() -> None:
         import time
 
         from ..llm import incremental as inc
-        from ..sources.dim_store import DimStore
 
         ids = read_table(spark, sf_dir, "documents").select("doc_id")
         b0 = ids.filter(F.col("doc_id") % 7 == 0).select(
@@ -1846,15 +1651,7 @@ def _register_stream_cluster_maintenance() -> None:
                 .option("maxFilesPerTrigger", 1)
                 .parquet(in_dir)
             )
-            q = (
-                sdf.writeStream.foreachBatch(
-                    inc.foreach_batch_cluster_updater(store)
-                )
-                .trigger(availableNow=True)
-                .option("checkpointLocation", os.path.join(stage, "ck"))
-                .start()
-            )
-            q.awaitTermination()
+            run_stream_foreach_batch(sdf, inc.foreach_batch_cluster_updater(store))
             return inc.read_cluster_map(store).localCheckpoint(eager=True)
         finally:
             shutil.rmtree(stage, ignore_errors=True)
@@ -1912,7 +1709,6 @@ def _register_stream_rare_token_score() -> None:
     settled output equals the batch `llm_rare_token_score` answer and
     the batch oracle applies verbatim."""
     from ..llm import sketch as sketch_mod
-    from ..sources.dim_store import DimStore
     from .llm_plans import _CMS_D, _CMS_MIN_FREQ, _CMS_W
     from .registry import REGISTRY as _R
 
@@ -1960,14 +1756,7 @@ def _register_stream_rare_token_score() -> None:
                 )
                 out.write.mode("append").parquet(out_dir)
 
-            sdf = read_stream_table(spark, sf_dir, "documents")
-            q = (
-                sdf.writeStream.foreachBatch(score)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", os.path.join(stage, "ck"))
-                .start()
-            )
-            q.awaitTermination()
+            run_stream_foreach_batch(read_stream_table(spark, sf_dir, "documents"), score)
             return spark.read.parquet(out_dir).localCheckpoint(eager=True)
         finally:
             shutil.rmtree(stage, ignore_errors=True)
@@ -1986,7 +1775,6 @@ def _register_stream_dsir_score() -> None:
     equals the batch dsir_score answer and the batch oracle's score CTE
     applies verbatim."""
     from ..llm import dsir
-    from ..sources.dim_store import DimStore
     from .llm_plans import _DSIR_B, _DSIR_GRAMS_CTE
 
     @register(
@@ -2039,14 +1827,7 @@ def _register_stream_dsir_score() -> None:
                 )
                 out.write.mode("append").parquet(out_dir)
 
-            sdf = read_stream_table(spark, sf_dir, "documents")
-            q = (
-                sdf.writeStream.foreachBatch(score)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", os.path.join(stage, "ck"))
-                .start()
-            )
-            q.awaitTermination()
+            run_stream_foreach_batch(read_stream_table(spark, sf_dir, "documents"), score)
             return spark.read.parquet(out_dir).localCheckpoint(eager=True)
         finally:
             shutil.rmtree(stage, ignore_errors=True)
@@ -2300,7 +2081,6 @@ def _register_stream_decay_score() -> None:
         tags=("streaming", "ads", "state"),
     )
     def stream_user_decay_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..sources.dim_store import DimStore
         from ..streaming.decay_state import decay_score_stateful
 
         ev = read_stream_table(spark, sf_dir, "events").select(
@@ -2309,37 +2089,16 @@ def _register_stream_decay_score() -> None:
             "event_id",
             F.floor(F.col("value") * 100).cast("long").alias("cents"),
         )
-        scored = decay_score_stateful(ev)
-        root = tempfile.mkdtemp(prefix="gmall_decay_store_")
-        store = DimStore(spark, root)
-
-        def upsert(batch: DataFrame, batch_id: int) -> None:
-            store.upsert("decay_scores", batch, pk="user_id")
-
-        ckpt = tempfile.mkdtemp(prefix="gmall_ckpt_")
-        try:
-            with _pinned_shuffle_partitions(spark, DEFAULT_STATE_PARTITIONS):
-                q = (
-                    scored.writeStream.outputMode("update")
-                    .foreachBatch(upsert)
-                    .trigger(availableNow=True)
-                    .option("checkpointLocation", ckpt)
-                    .start()
-                )
-                q.awaitTermination()
-            out = store.read("decay_scores").select(
-                F.col("user_id").cast("long").alias("user_id"),
-                F.col("n_scored").cast("long").alias("n_scored"),
-                F.col("num_q").cast("long").alias("num_q"),
-                (
-                    F.col("num_q").cast("double")
-                    / F.lit(float(100 * (1 << 15)))
-                ).alias("decay_score"),
-            )
-            return out.localCheckpoint(eager=True)
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
-            shutil.rmtree(ckpt, ignore_errors=True)
+        scored = decay_score_stateful(ev).withColumn("_k", F.col("user_id"))
+        settled = _run_update_upsert(scored, "decay_scores")
+        return settled.select(
+            F.col("user_id").cast("long").alias("user_id"),
+            F.col("n_scored").cast("long").alias("n_scored"),
+            F.col("num_q").cast("long").alias("num_q"),
+            (
+                F.col("num_q").cast("double") / F.lit(float(100 * (1 << 15)))
+            ).alias("decay_score"),
+        )
 
 
 _register_stream_decay_score()
@@ -2441,22 +2200,7 @@ def _register_stream_attribution() -> None:
                 & (t["t_ts"] < p["p_ts"])
                 & (t["t_ts"] >= p["p_ts"] - F.expr("INTERVAL 24 HOURS")),
             ).select("purchase_id", "user_id", "cents", "channel")
-            hop = os.path.join(stage, "hop")
-            with _pinned_shuffle_partitions(spark, DEFAULT_STATE_PARTITIONS):
-                q1 = (
-                    tp.writeStream.format("parquet")
-                    .option("path", hop)
-                    .option("checkpointLocation", os.path.join(stage, "ck1"))
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q1.awaitTermination()
-            # hop schema is known at plan time from the tp projection —
-            # never re-infer it from the written files (r8 ADVICE: an
-            # empty events input writes zero data files and
-            # spark.read.parquet would throw 'unable to infer schema'
-            # instead of settling to an empty result)
-            hop_stream = spark.readStream.schema(tp.schema).parquet(hop)
+            hop_stream = run_stream_hop(tp, os.path.join(stage, "hop"))
             per_chan = hop_stream.groupBy(
                 "purchase_id", "user_id", "cents", "channel"
             ).agg(F.count(F.lit(1)).alias("channel_touches"))
@@ -2880,7 +2624,7 @@ def _register_stream_funnel() -> None:
     def stream_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Sentinel pattern as stream_user_jump: one data file plus a
         far-future sentinel file advance the watermark so every real
-        day's event-time timeout fires before availableNow drains."""
+        day's event-time timeout fires before the bounded run drains."""
         from ..streaming.funnel_state import funnel_stateful
 
         ev = read_table(spark, sf_dir, "events").select(
@@ -3008,7 +2752,6 @@ def _register_stream_training_ingest() -> None:
     def stream_llm_training_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         from ..llm import incremental as inc
         from ..llm.ingest import foreach_batch_training_ingest
-        from ..sources.dim_store import DimStore
         from ..streaming.eos import IdempotentBatchStore
         from .llm_plans import _inc_corpus_arrivals, _with_url
 
@@ -3018,7 +2761,7 @@ def _register_stream_training_ingest() -> None:
             F.col("doc_id") % 13 == 0
         ).select("doc_id", "text")
         stage = tempfile.mkdtemp(prefix="gmall_ingest_")
-        idx = DimStore(spark, tempfile.mkdtemp(prefix="gmall_ingest_idx_"))
+        idx = DimStore(spark, os.path.join(stage, "idx"))
         try:
             inc.build_dedup_index(idx, corpus)
             in_dir = os.path.join(stage, "in")
@@ -3036,15 +2779,9 @@ def _register_stream_training_ingest() -> None:
                 .option("maxFilesPerTrigger", 1)
                 .parquet(in_dir)
             )
-            fn = foreach_batch_training_ingest(idx, shard_store, bench)
-            with _pinned_shuffle_partitions(spark, DEFAULT_STATE_PARTITIONS):
-                q = (
-                    sdf.writeStream.foreachBatch(fn)
-                    .trigger(availableNow=True)
-                    .option("checkpointLocation", os.path.join(stage, "ck"))
-                    .start()
-                )
-                q.awaitTermination()
+            run_stream_foreach_batch(
+                sdf, foreach_batch_training_ingest(idx, shard_store, bench)
+            )
             # batch column dropped: the surviving SET is order-independent
             # on this fixture (arrival batches contain no cross-batch
             # dups), the per-batch placement is the store's concern
@@ -3055,7 +2792,6 @@ def _register_stream_training_ingest() -> None:
             )
         finally:
             shutil.rmtree(stage, ignore_errors=True)
-            shutil.rmtree(idx.root, ignore_errors=True)
 
 
 _register_stream_training_ingest()
@@ -3119,7 +2855,6 @@ def _register_stream_training_ingest_norm() -> None:
         from ..llm import incremental as inc
         from ..llm import text as text_mod
         from ..llm.ingest import foreach_batch_training_ingest
-        from ..sources.dim_store import DimStore
         from ..streaming.eos import IdempotentBatchStore
         from .llm_plans import _inc_corpus_arrivals, _with_url
 
@@ -3141,7 +2876,7 @@ def _register_stream_training_ingest_norm() -> None:
             F.col("doc_id") % 13 == 0
         ).select("doc_id", "text")
         stage = tempfile.mkdtemp(prefix="gmall_ingestn_")
-        idx = DimStore(spark, tempfile.mkdtemp(prefix="gmall_ingestn_idx_"))
+        idx = DimStore(spark, os.path.join(stage, "idx"))
         try:
             inc.build_dedup_index(idx, corpus)
             in_dir = os.path.join(stage, "in")
@@ -3165,15 +2900,9 @@ def _register_stream_training_ingest_norm() -> None:
             sdf_norm = text_mod.normalize_text(
                 sdf, "vtext", out_col="text"
             ).drop("vtext")
-            fn = foreach_batch_training_ingest(idx, shard_store, bench)
-            with _pinned_shuffle_partitions(spark, DEFAULT_STATE_PARTITIONS):
-                q = (
-                    sdf_norm.writeStream.foreachBatch(fn)
-                    .trigger(availableNow=True)
-                    .option("checkpointLocation", os.path.join(stage, "ck"))
-                    .start()
-                )
-                q.awaitTermination()
+            run_stream_foreach_batch(
+                sdf_norm, foreach_batch_training_ingest(idx, shard_store, bench)
+            )
             return (
                 shard_store.read_committed()
                 .select("doc_id", "shard", "n_tokens")
@@ -3181,7 +2910,6 @@ def _register_stream_training_ingest_norm() -> None:
             )
         finally:
             shutil.rmtree(stage, ignore_errors=True)
-            shutil.rmtree(idx.root, ignore_errors=True)
 
 
 _register_stream_training_ingest_norm()

@@ -316,22 +316,6 @@ class DimStore:
                 "overwrite"
             ).parquet(os.path.join(path, "__bucket=0"))
 
-    def compact_if_fragmented(
-        self, table: str, max_files_per_bucket: int = 4
-    ) -> bool:
-        """Fragmentation-triggered compaction — the observability-driven
-        alternative to the every-N-upserts cadence: compact only when
-        the measured data-file count exceeds ``max_files_per_bucket``
-        per bucket on average (hot-bucket workloads fragment unevenly;
-        counting files targets actual fragmentation instead of upsert
-        count). Returns whether a compaction ran."""
-        if not self.exists(table):
-            return False
-        if self.file_count(table) > max_files_per_bucket * self.n_buckets:
-            self.compact(table)
-            return True
-        return False
-
     def file_count(self, table: str) -> int:
         """Data-file count across bucket dirs (lifecycle observability —
         what the compaction chain test bounds)."""

@@ -14,6 +14,7 @@ pushes filters/projections into the scan (check ``PushedFilters`` in
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -39,6 +40,7 @@ def _fix_nanos(df: DataFrame, name: str) -> DataFrame:
 
 
 _SHIPPED: set[int] = set()
+_SHIP_LOCK = threading.Lock()
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -46,27 +48,35 @@ def _ship_package(spark: SparkSession) -> None:
     operators (applyInPandasWithState fns) pickle by module reference; a
     driver that merely sys.path-inserted the repo leaves workers unable to
     import the module. Shipping a zip via addPyFile puts the package on
-    every worker's path regardless of the driver's cwd/env."""
-    sc = spark.sparkContext
-    if id(sc) in _SHIPPED:
-        return
-    import tempfile
-    import zipfile
+    every worker's path regardless of the driver's cwd/env.
 
-    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    parent = os.path.dirname(pkg_root)
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"gmall_pkg_{os.getpid()}_{id(sc)}.zip"
-    )
-    if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w") as z:
-            for dirpath, _dirs, files in os.walk(pkg_root):
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(dirpath, f)
-                        z.write(full, os.path.relpath(full, parent))
-    sc.addPyFile(zpath)
-    _SHIPPED.add(id(sc))
+    Concurrent first reads (serving threads sharing one session) must
+    not see a half-written zip: the check, the write and ``addPyFile``
+    run under one lock, and the zip is written under a temp name and
+    renamed into place."""
+    sc = spark.sparkContext
+    with _SHIP_LOCK:
+        if id(sc) in _SHIPPED:
+            return
+        import tempfile
+        import zipfile
+
+        pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        parent = os.path.dirname(pkg_root)
+        zpath = os.path.join(
+            tempfile.gettempdir(), f"gmall_pkg_{os.getpid()}_{id(sc)}.zip"
+        )
+        if not os.path.exists(zpath):
+            tmp = zpath + ".tmp"
+            with zipfile.ZipFile(tmp, "w") as z:
+                for dirpath, _dirs, files in os.walk(pkg_root):
+                    for f in files:
+                        if f.endswith(".py"):
+                            full = os.path.join(dirpath, f)
+                            z.write(full, os.path.relpath(full, parent))
+            os.replace(tmp, zpath)
+        sc.addPyFile(zpath)
+        _SHIPPED.add(id(sc))
 
 
 def _pin_session_confs(spark: SparkSession) -> None:
@@ -97,8 +107,8 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def read_stream_table(
     spark: SparkSession, sf_dir: str, name: str, schema=None
 ) -> DataFrame:
-    """Streaming read of the same table (file source, used with
-    availableNow triggers in tests; swap for format('kafka') in prod)."""
+    """Streaming read of the same table (file source, run to completion
+    by ``streaming.runner`` in tests; swap for format('kafka') in prod)."""
     _pin_session_confs(spark)
     if name in _NANOS_TABLES:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

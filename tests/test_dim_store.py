@@ -291,25 +291,6 @@ def test_delete_every_row_leaves_readable_empty_table(spark, tmp_path):
     assert store.read("tab").count() == 1
 
 
-def test_compact_if_fragmented_thresholds(spark, tmp_path):
-    """Fragmentation-triggered compaction: below the per-bucket file
-    threshold it is a no-op; above it it compacts and reports True."""
-    store = DimStore(spark, str(tmp_path / "frag"), n_buckets=2)
-    rows = lambda lo: spark.createDataFrame(
-        [(i, f"v{i}") for i in range(lo, lo + 4)], "id long, val string"
-    )
-    store.upsert("tab", rows(0), pk="id")
-    assert store.compact_if_fragmented("tab", max_files_per_bucket=50) is False
-    for b in range(1, 7):
-        store.upsert("tab", rows(b * 10), pk="id")
-    frag = store.file_count("tab")
-    assert frag > 2 * store.n_buckets  # genuinely fragmented
-    assert store.compact_if_fragmented("tab", max_files_per_bucket=2) is True
-    assert store.file_count("tab") < frag
-    assert store.read("tab").count() == 4 * 7
-    assert store.compact_if_fragmented("missing") is False
-
-
 # ------------------------------------------------- r8: journaled bucket swaps
 
 

@@ -113,34 +113,6 @@ def test_stream_batch_parity_visitor_stats(spark, sf_dir, tmp_path):
     assert b == s
 
 
-def test_uv_tws_gated_or_matches(spark, tmp_path):
-    """transformWithStateInPandas variant: runs (and matches the
-    applyInPandasWithState semantics) when the runtime supports it;
-    otherwise raises a clear gate error."""
-    from gmall_flink_2022_spark.streaming.uv_tws import (
-        tws_runtime_available,
-        unique_visit_tws,
-    )
-
-    rows = [(1, "2024-01-01 08:00:00"), (1, "2024-01-02 00:01:00")]
-    df = spark.createDataFrame(rows, "user_id long, cts string").withColumn(
-        "ts", F.to_timestamp("cts")
-    ).select("user_id", "ts")
-    in_dir = str(tmp_path / "tws_in")
-    df.write.parquet(in_dir)
-    sdf = spark.readStream.schema(df.schema).parquet(in_dir)
-    if tws_runtime_available():
-        out = run_stream_to_table(
-            unique_visit_tws(sdf), "uv_tws_t", checkpoint=str(tmp_path / "c")
-        )
-        assert out.count() == 2
-    else:
-        import pytest
-
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            unique_visit_tws(sdf)
-
-
 def test_watermark_drops_late_data(spark, tmp_path):
     """Late-data handling (SURVEY §2.6 W7): rows arriving after the
     watermark has passed their window's end are silently dropped — the
@@ -283,6 +255,27 @@ def test_streaming_registry_no_collect_set_outside_parity_demos():
             demo, demo + "_scale"
         )
         assert twin in REGISTRY, f"missing scale twin {twin} for {demo}"
+
+
+def test_bounded_queries_start_only_in_runner():
+    """Source gate: streaming/runner.py is the one place that starts a
+    bounded query (trigger, checkpoint, state-partition pin), and
+    sources/kafka.py holds the deployed Kafka sink. Any other
+    ``writeStream`` or ``availableNow`` in the package is a hand-rolled
+    copy of the runner."""
+    import pathlib
+
+    import gmall_flink_2022_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    allowed = {"streaming/runner.py", "sources/kafka.py"}
+    offenders = []
+    for f in sorted(root.rglob("*.py")):
+        rel = f.relative_to(root).as_posix()
+        src = f.read_text()
+        if rel not in allowed and ("writeStream" in src or "availableNow" in src):
+            offenders.append(rel)
+    assert offenders == []
 
 
 def test_scale_agg_builders_plan_gates(spark, sf_dir):
@@ -465,10 +458,19 @@ def test_decay_score_stateful_multi_batch_late_arrival(spark, tmp_path):
     assert K == 16
 
 
-def test_stream_attribution_empty_events_settles_empty(spark, tmp_path):
-    """r8 ADVICE regression: an events input whose stream writes ZERO hop
-    data files must settle to an empty result, not raise 'unable to infer
-    schema' — the hop schema is built statically from the tp projection."""
+@pytest.mark.parametrize(
+    "name",
+    [
+        "stream_two_hop_pipeline",
+        "stream_two_hop_eos",
+        "stream_two_hop_scale",
+        "stream_attribution_linear",
+    ],
+)
+def test_stream_hop_empty_events_settles_empty(spark, tmp_path, name):
+    """An events input whose first query writes ZERO hop data files must
+    settle to an empty result, not raise 'unable to infer schema': the
+    hop is re-read with the writing plan's schema (runner.run_stream_hop)."""
     from gmall_flink_2022_spark.plans.registry import REGISTRY
 
     sf = tmp_path / "sf_empty"
@@ -479,8 +481,30 @@ def test_stream_attribution_empty_events_settles_empty(spark, tmp_path):
         "event_type string, value double, props string",
     )
     empty.write.parquet(str(sf / "events.parquet"))
-    out = REGISTRY["stream_attribution_linear"].fn(spark, str(sf))
+    out = REGISTRY[name].fn(spark, str(sf))
     assert out.count() == 0
+
+
+def test_stream_runs_leave_no_temp_dirs(spark, sf_dir):
+    """A memory-sink entry and a hop entry must delete every checkpoint,
+    hop and store dir they create under the temp dir."""
+    import os
+    import tempfile
+
+    from gmall_flink_2022_spark.plans.registry import REGISTRY
+
+    def gmall_dirs() -> set[str]:
+        root = tempfile.gettempdir()
+        return {
+            n
+            for n in os.listdir(root)
+            if n.startswith("gmall_") and os.path.isdir(os.path.join(root, n))
+        }
+
+    before = gmall_dirs()
+    for name in ("stream_uv_dropdup", "stream_two_hop_pipeline"):
+        assert REGISTRY[name].fn(spark, sf_dir).count() > 0
+    assert gmall_dirs() - before == set()
 
 
 def test_curation_release_caches(spark):
